@@ -240,7 +240,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     )
     # hash-derived permutations (md5 order per perm id) — exchangeable under
     # H0 like RNG shuffles, but identical in both engines → hash-checkable;
-    # the seeded-RNG permutation_test stays pytest-covered
+    # the seeded-RNG drift.mmd_perm_test is bit-matched against
+    # permutation_test in tests/test_kernel_family.py
     q["mmd_perm_test"] = lambda s, sf: drift.mmd_perm_test_hash(
         _events_labeled(s, sf), "value", n_per_side=256, sigma=5.0, order_col="event_id"
     )

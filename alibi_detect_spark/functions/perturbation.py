@@ -6,6 +6,7 @@ determinism contract: all randomness is an explicit function of the seed)."""
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Callable
 
 import numpy as np
@@ -70,6 +71,46 @@ def permutation_test(
         dist_permutations[i] = d
         k += dist <= d
     return k / n_permutations, dist, dist_permutations
+
+
+def md5_permutation_test(
+    metric: Callable[[np.ndarray], float],
+    x_mask: np.ndarray,
+    ids: np.ndarray,
+    n_permutations: int,
+) -> tuple[float, float]:
+    """Permutation test with HASH-DERIVED relabelings — the SQL-checkable
+    twin of :func:`permutation_test`. ``metric`` maps a boolean X-side mask
+    over the pooled rows to the statistic; relabeling ``p`` (1..P) puts on
+    the X side the ``x_mask.sum()`` ids that come first in ``md5("{p}:{id}")``
+    hex order (stable on ties), the order a SQL engine's
+    ``row_number() OVER (ORDER BY md5(p || ':' || id))`` gives. md5 orders
+    are exchangeable under H0 like RNG shuffles. Returns ``(stat, p)``, p =
+    share of relabelings whose metric ≥ the observed one."""
+    stat = metric(x_mask)
+    n = int(x_mask.sum())
+    hits = 0
+    for p in range(1, n_permutations + 1):
+        pri = np.array([hashlib.md5(f"{p}:{g}".encode()).hexdigest() for g in ids])
+        mask = np.zeros(len(ids), dtype=bool)
+        mask[np.argsort(pri, kind="stable")[:n]] = True
+        hits += int(stat <= metric(mask))
+    return stat, hits / n_permutations
+
+
+def mmd2_masked(k: np.ndarray, x_mask: np.ndarray) -> float:
+    """Unbiased MMD² of a pooled kernel matrix ``k`` split by ``x_mask``
+    (True = X side): block sums with the diagonals excluded, the masked form
+    of :func:`mmd2_unbiased` that lets permutations re-index one matrix."""
+    kxx = k[np.ix_(x_mask, x_mask)]
+    kyy = k[np.ix_(~x_mask, ~x_mask)]
+    kxy = k[np.ix_(x_mask, ~x_mask)]
+    nn, mm = int(x_mask.sum()), int((~x_mask).sum())
+    return (
+        (kxx.sum() - np.trace(kxx)) / (nn * (nn - 1.0))
+        + (kyy.sum() - np.trace(kyy)) / (mm * (mm - 1.0))
+        - 2.0 * kxy.sum() / (nn * float(mm))
+    )
 
 
 def mmd2_unbiased(x: np.ndarray, y: np.ndarray, sigma: float) -> float:

@@ -28,7 +28,9 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from .outlier import top_k_ranked
 
 _TWO_PI = 2.0 * math.pi
 _PLO = 1e-12
@@ -145,12 +147,7 @@ def adversarial_ae_2feat(
     r0 = F.lit(1.0) - r1
     score = t0 * F.log(t0 / r0) + t1 * F.log(t1 / r1)
     scored = j.select(id_col, (F.round(score, 6) + F.lit(0.0)).alias("adv_score"))
-    order = [F.col("adv_score").desc(), F.col(id_col)]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        id_col, "adv_score", F.col("rank").cast("int").alias("rank")
-    )
+    return top_k_ranked(scored, "adv_score", [id_col], top_k)
 
 
 def model_distillation_2feat(
@@ -210,9 +207,4 @@ def model_distillation_2feat(
     p0 = F.lit(1.0) - p1
     score = p0 * F.log(p0 / (F.lit(1.0) - yhat)) + p1 * F.log(p1 / yhat)
     scored = sj.select(id_col, (F.round(score, 6) + F.lit(0.0)).alias("distill_score"))
-    order = [F.col("distill_score").desc(), F.col(id_col)]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        id_col, "distill_score", F.col("rank").cast("int").alias("rank")
-    )
+    return top_k_ranked(scored, "distill_score", [id_col], top_k)

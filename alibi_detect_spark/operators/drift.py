@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .outlier import top_k_ranked
+
 KS_SF_TERMS = 100
 
 
@@ -159,6 +161,94 @@ def chi2_contingency(df: DataFrame, feature: str, sample: str = "sample") -> Dat
     return stat
 
 
+def _head_per_side(
+    df: DataFrame, sample: str | Column, order: str | Column, n: int, **cols: Column
+) -> DataFrame:
+    """The deterministic head subsample every kernel test starts from: per
+    side ``s`` (``"ref"`` / other), the first ``n`` rows by ``order``,
+    numbered ``rn`` = 1..n and carrying ``cols`` under their keyword names.
+    The subsample is the only full scan of a kernel test."""
+    as_col = lambda c: F.col(c) if isinstance(c, str) else c  # noqa: E731
+    w = Window.partitionBy("s").orderBy("o")
+    return (
+        df.select(
+            as_col(sample).alias("s"),
+            *[c.alias(name) for name, c in cols.items()],
+            as_col(order).alias("o"),
+        )
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= n)
+        .select("s", "rn", *cols)
+    )
+
+
+def _parity_side(id_col: str) -> Column:
+    """Even ids are the reference side, odd ids the test side."""
+    return F.when(F.col(id_col) % 2 == 0, F.lit("ref")).otherwise(F.lit("test"))
+
+
+def _mmd2_blocks(pairs: DataFrame) -> DataFrame:
+    """Unbiased MMD² from the pooled pair relation ``(sa, ia, sb, ib, k)``:
+    one aggregate of the three kernel block sums (diagonals excluded) and
+    the block sizes (``utils/pytorch/distance.py:96-128``)."""
+    xx = (F.col("sa") == "ref") & (F.col("sb") == "ref")
+    yy = (F.col("sa") != "ref") & (F.col("sb") != "ref")
+    xy = (F.col("sa") == "ref") & (F.col("sb") != "ref")
+    off_diag = F.col("ia") != F.col("ib")
+    agg = pairs.agg(
+        F.sum(F.when(xx & off_diag, F.col("k")).otherwise(0.0)).alias("kxx"),
+        F.sum(F.when(yy & off_diag, F.col("k")).otherwise(0.0)).alias("kyy"),
+        F.sum(F.when(xy, F.col("k")).otherwise(0.0)).alias("kxy"),
+        F.sum(F.when(xx, 1).otherwise(0)).alias("nn"),
+        F.sum(F.when(yy, 1).otherwise(0)).alias("mm"),
+        F.sum(F.when(xy, 1).otherwise(0)).alias("nm"),
+    )
+    n = F.sqrt(F.col("nn").cast("double"))
+    m = F.sqrt(F.col("mm").cast("double"))
+    mmd2 = (
+        F.col("kxx") / (n * (n - 1)) + F.col("kyy") / (m * (m - 1)) - 2 * F.col("kxy") / F.col("nm")
+    )
+    return agg.select(
+        n.cast("long").alias("n_ref"),
+        m.cast("long").alias("n_test"),
+        (F.round(mmd2, 6) + F.lit(0.0)).alias("mmd2"),
+    )
+
+
+def _perm_test(sub: DataFrame, stat_name: str | tuple[str, ...], fn) -> DataFrame:
+    """One Arrow group over the head rows, sorted by (``s``, ``rn``):
+    ``fn(pdf)`` returns ``(n_ref, n_test, stat, p)`` (one stat per name in
+    ``stat_name``), emitted as one row with the statistics rounded to 6
+    places (``+ 0.0`` folds -0.0) and ``p_value``."""
+    import pandas as pd
+
+    names = (stat_name,) if isinstance(stat_name, str) else stat_name
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        n, m, *stats, p = fn(pdf.sort_values(["s", "rn"], kind="mergesort"))
+        out = {"n_ref": [n], "n_test": [m]}
+        out.update({name: [round(v, 6) + 0.0] for name, v in zip(names, stats)})
+        out["p_value"] = [round(p, 6)]
+        return pd.DataFrame(out)
+
+    schema = ", ".join(["n_ref long", "n_test long", *[f"{c} double" for c in names], "p_value double"])
+    return sub.groupBy().applyInPandas(run, schema=schema)
+
+
+def _md5_perm(pdf, n_per_side: int, n_permutations: int, metric) -> tuple:
+    """``(n_ref, n_test, stat, p)`` of the md5-relabeling test over the
+    pooled head rows; pooled ids are ``rn`` (ref) and ``n_per_side + rn``
+    (test), the ``gid`` of the SQL twins."""
+    import numpy as np
+
+    from ..functions.perturbation import md5_permutation_test
+
+    x_mask = (pdf["s"] == "ref").to_numpy()
+    ids = np.where(x_mask, pdf["rn"].to_numpy(), n_per_side + pdf["rn"].to_numpy())
+    stat, p = md5_permutation_test(metric, x_mask, ids, n_permutations)
+    return int(x_mask.sum()), int((~x_mask).sum()), stat, p
+
+
 def mmd_2samp(
     df: DataFrame,
     value: str,
@@ -177,13 +267,7 @@ def mmd_2samp(
     the statistic is a closed-form function of the sample — the heuristic
     variant lives in the online detector (``functions/mmd.py``).
     """
-    oc = order_col or value
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        df.select(F.col(sample).alias("s"), F.col(value).cast("double").alias("v"), F.col(oc).alias("o"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-    )
+    sub = _head_per_side(df, sample, order_col or value, n_per_side, v=F.col(value).cast("double"))
     a = sub.select(F.col("s").alias("sa"), F.col("v").alias("va"), F.col("rn").alias("ia"))
     b = sub.select(F.col("s").alias("sb"), F.col("v").alias("vb"), F.col("rn").alias("ib"))
     gamma = 1.0 / (2.0 * sigma * sigma)
@@ -191,24 +275,7 @@ def mmd_2samp(
         a.join(F.broadcast(b))
         .withColumn("k", F.exp(F.lit(-gamma) * (F.col("va") - F.col("vb")) * (F.col("va") - F.col("vb"))))
     )
-    agg = pairs.agg(
-        F.sum(F.when((F.col("sa") == "ref") & (F.col("sb") == "ref") & (F.col("ia") != F.col("ib")), F.col("k")).otherwise(0.0)).alias("kxx"),
-        F.sum(F.when((F.col("sa") != "ref") & (F.col("sb") != "ref") & (F.col("ia") != F.col("ib")), F.col("k")).otherwise(0.0)).alias("kyy"),
-        F.sum(F.when((F.col("sa") == "ref") & (F.col("sb") != "ref"), F.col("k")).otherwise(0.0)).alias("kxy"),
-        F.sum(F.when((F.col("sa") == "ref") & (F.col("sb") == "ref"), 1).otherwise(0)).alias("nn"),
-        F.sum(F.when((F.col("sa") != "ref") & (F.col("sb") != "ref"), 1).otherwise(0)).alias("mm"),
-        F.sum(F.when((F.col("sa") == "ref") & (F.col("sb") != "ref"), 1).otherwise(0)).alias("nm"),
-    )
-    n = F.sqrt(F.col("nn").cast("double"))
-    m = F.sqrt(F.col("mm").cast("double"))
-    mmd2 = (
-        F.col("kxx") / (n * (n - 1)) + F.col("kyy") / (m * (m - 1)) - 2 * F.col("kxy") / F.col("nm")
-    )
-    return agg.select(
-        n.cast("long").alias("n_ref"),
-        m.cast("long").alias("n_test"),
-        (F.round(mmd2, 6) + F.lit(0.0)).alias("mmd2"),
-    )
+    return _mmd2_blocks(pairs)
 
 
 def mmd_2samp_vec(
@@ -235,13 +302,7 @@ def mmd_2samp_vec(
     Scale shape: the subsample head (n ≤ n_per_side per side) is the only
     full scan; the pair relation is bounded by (2n)²·d regardless of corpus
     size, with map-side partial aggregation on the pair keys."""
-    s = F.when(F.col(id_col) % 2 == 0, F.lit("ref")).otherwise(F.lit("test"))
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        emb.select(s.alias("s"), F.col(id_col).alias("o"), F.col(vec_col).alias("v"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-    )
+    sub = _head_per_side(emb, _parity_side(id_col), id_col, n_per_side, v=F.col(vec_col))
     ex = sub.select("s", "rn", F.posexplode("v").alias("j", "x")).select(
         "s",
         "rn",
@@ -263,25 +324,7 @@ def mmd_2samp_vec(
     )
     gamma = 1.0 / (2.0 * sigma * sigma)
     qq = float(quant) * float(quant)
-    pairs = d2.withColumn("k", F.exp(F.lit(-gamma) * (F.col("d2q") / F.lit(qq))))
-    agg = pairs.agg(
-        F.sum(F.when((F.col("sa") == "ref") & (F.col("sb") == "ref") & (F.col("ia") != F.col("ib")), F.col("k")).otherwise(0.0)).alias("kxx"),
-        F.sum(F.when((F.col("sa") != "ref") & (F.col("sb") != "ref") & (F.col("ia") != F.col("ib")), F.col("k")).otherwise(0.0)).alias("kyy"),
-        F.sum(F.when((F.col("sa") == "ref") & (F.col("sb") != "ref"), F.col("k")).otherwise(0.0)).alias("kxy"),
-        F.sum(F.when((F.col("sa") == "ref") & (F.col("sb") == "ref"), 1).otherwise(0)).alias("nn"),
-        F.sum(F.when((F.col("sa") != "ref") & (F.col("sb") != "ref"), 1).otherwise(0)).alias("mm"),
-        F.sum(F.when((F.col("sa") == "ref") & (F.col("sb") != "ref"), 1).otherwise(0)).alias("nm"),
-    )
-    n = F.sqrt(F.col("nn").cast("double"))
-    m = F.sqrt(F.col("mm").cast("double"))
-    mmd2 = (
-        F.col("kxx") / (n * (n - 1)) + F.col("kyy") / (m * (m - 1)) - 2 * F.col("kxy") / F.col("nm")
-    )
-    return agg.select(
-        n.cast("long").alias("n_ref"),
-        m.cast("long").alias("n_test"),
-        (F.round(mmd2, 6) + F.lit(0.0)).alias("mmd2"),
-    )
+    return _mmd2_blocks(d2.withColumn("k", F.exp(F.lit(-gamma) * (F.col("d2q") / F.lit(qq)))))
 
 
 def mmd_perm_test_vec(
@@ -303,66 +346,24 @@ def mmd_perm_test_vec(
     distances (``Σ_j (x_j − y_j)²`` over 1e-6-rounded components — exactly
     the relation the SQL twin aggregates), and every md5-ordered relabeling
     re-indexes it; the subsample head is the only full scan."""
-    import hashlib
-
     import numpy as np
-    import pandas as pd
 
-    s = F.when(F.col(id_col) % 2 == 0, F.lit("ref")).otherwise(F.lit("test"))
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        emb.select(s.alias("s"), F.col(id_col).alias("o"), F.col(vec_col).alias("v"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-        .select("s", "rn", "v")
-    )
+    from ..functions.perturbation import mmd2_masked
+
+    sub = _head_per_side(emb, _parity_side(id_col), id_col, n_per_side, v=F.col(vec_col))
     gamma = 1.0 / (2.0 * sigma * sigma)
     qq = float(quant) * float(quant)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["s", "rn"], kind="mergesort")
+    def fn(pdf):
         x = np.stack(pdf["v"].to_numpy()).astype(np.float64) * float(quant)
         # HALF-AWAY-FROM-ZERO to match Spark/DuckDB round() (np.round is
         # half-even and would diverge on exact .5 products)
         xq = np.where(x >= 0, np.floor(x + 0.5), -np.floor(-x + 0.5)).astype(np.int64)
         d2q = ((xq[:, None, :] - xq[None, :, :]) ** 2).sum(axis=-1).astype(np.float64)
         k = np.exp(-gamma * (d2q / qq))
-        n = int((pdf["s"] == "ref").sum())
-        m = len(xq) - n
+        return _md5_perm(pdf, n_per_side, n_permutations, lambda m: mmd2_masked(k, m))
 
-        def mmd2(x_mask: np.ndarray) -> float:
-            kxx = k[np.ix_(x_mask, x_mask)]
-            kyy = k[np.ix_(~x_mask, ~x_mask)]
-            kxy = k[np.ix_(x_mask, ~x_mask)]
-            nn, mm = int(x_mask.sum()), int((~x_mask).sum())
-            return (
-                (kxx.sum() - np.trace(kxx)) / (nn * (nn - 1.0))
-                + (kyy.sum() - np.trace(kyy)) / (mm * (mm - 1.0))
-                - 2.0 * kxy.sum() / (nn * float(mm))
-            )
-
-        obs_mask = (pdf["s"] == "ref").to_numpy()
-        stat = mmd2(obs_mask)
-        gid = np.where(obs_mask, pdf["rn"].to_numpy(), n_per_side + pdf["rn"].to_numpy())
-        hits = 0
-        for p in range(1, n_permutations + 1):
-            pri = np.array([hashlib.md5(f"{p}:{g}".encode()).hexdigest() for g in gid])
-            order = np.argsort(pri, kind="stable")
-            mask = np.zeros(len(xq), dtype=bool)
-            mask[order[:n]] = True
-            hits += int(stat <= mmd2(mask))
-        return pd.DataFrame(
-            {
-                "n_ref": [n],
-                "n_test": [m],
-                "mmd2": [round(stat, 6) + 0.0],
-                "p_value": [round(hits / n_permutations, 6)],
-            }
-        )
-
-    return sub.groupBy().applyInPandas(
-        fn, schema="n_ref long, n_test long, mmd2 double, p_value double"
-    )
+    return _perm_test(sub, "mmd2", fn)
 
 
 def tabular_drift(
@@ -590,14 +591,7 @@ def mahalanobis_scores(
     dy = F.col(y).cast("double") - F.col("my")
     score = (F.col("syy") * dx * dx - 2 * F.col("sxy") * dx * dy + F.col("sxx") * dy * dy) / det
     scored = j.select(*id_cols, F.round(score, 6).alias("maha_score"))
-    # orderBy+limit → TakeOrderedAndProject: a distributed per-partition top-k
-    # + tiny driver merge, NOT a global sort. row_number runs on k rows only.
-    order = [F.col("maha_score").desc(), *[F.col(c) for c in id_cols]]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        *id_cols, "maha_score", "rank"
-    )
+    return top_k_ranked(scored, "maha_score", id_cols, top_k)
 
 
 def mmd_perm_test(
@@ -616,38 +610,19 @@ def mmd_perm_test(
     Arrow group computing the observed unbiased MMD² and the seeded
     label-shuffle null. Everything before the tiny final group is
     relational."""
-    import pandas as pd
-
     from ..functions.perturbation import mmd2_unbiased, permutation_test
 
-    oc = order_col or value
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        df.select(F.col(sample).alias("s"), F.col(value).cast("double").alias("v"), F.col(oc).alias("o"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-        .select("s", "v", "rn")
-    )
+    sub = _head_per_side(df, sample, order_col or value, n_per_side, v=F.col(value).cast("double"))
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["s", "rn"], kind="mergesort")
+    def fn(pdf):
         x = pdf[pdf["s"] == "ref"]["v"].to_numpy()[:, None]
         y = pdf[pdf["s"] != "ref"]["v"].to_numpy()[:, None]
         p, stat, _ = permutation_test(
             x, y, mmd2_unbiased, n_permutations=n_permutations, seed=seed, sigma=sigma
         )
-        return pd.DataFrame(
-            {
-                "n_ref": [len(x)],
-                "n_test": [len(y)],
-                "mmd2": [round(stat, 6) + 0.0],
-                "p_value": [round(p, 6)],
-            }
-        )
+        return len(x), len(y), stat, p
 
-    return sub.groupBy().applyInPandas(
-        fn, schema="n_ref long, n_test long, mmd2 double, p_value double"
-    )
+    return _perm_test(sub, "mmd2", fn)
 
 
 def context_mmd_drift(
@@ -668,27 +643,16 @@ def context_mmd_drift(
     are bounded by ``n_per_side``, matching the reference's in-memory
     contract. Seeded permutations → rows-only driver check + behavioral
     pytest."""
-    import pandas as pd
-
     from ..functions.context_mmd import context_mmd_2samp
 
-    oc = order_col or value
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        df.select(
-            F.col(sample).alias("s"),
-            F.col(value).cast("double").alias("v"),
-            *[F.col(c).cast("double").alias(f"c{i}") for i, c in enumerate(context_cols)],
-            F.col(oc).alias("o"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-        .drop("o")
-    )
     c_cols = [f"c{i}" for i in range(len(context_cols))]
+    sub = _head_per_side(
+        df, sample, order_col or value, n_per_side,
+        v=F.col(value).cast("double"),
+        **{c: F.col(src).cast("double") for c, src in zip(c_cols, context_cols)},
+    )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["s", "rn"], kind="mergesort")
+    def fn(pdf):
         ref = pdf[pdf["s"] == "ref"]
         test = pdf[pdf["s"] != "ref"]
         res = context_mmd_2samp(
@@ -699,19 +663,9 @@ def context_mmd_drift(
             n_permutations=n_permutations,
             seed=seed,
         )
-        return pd.DataFrame(
-            {
-                "n_ref": [res.n_ref],
-                "n_test": [res.n_test],
-                "cmmd_stat": [round(res.stat, 6)],
-                "threshold": [round(res.threshold, 6)],
-                "p_value": [round(res.p_value, 6)],
-            }
-        )
+        return res.n_ref, res.n_test, res.stat, res.threshold, res.p_value
 
-    return sub.groupBy().applyInPandas(
-        fn, schema="n_ref long, n_test long, cmmd_stat double, threshold double, p_value double"
-    )
+    return _perm_test(sub, ("cmmd_stat", "threshold"), fn)
 
 
 def mmd_perm_test_hash(
@@ -732,63 +686,22 @@ def mmd_perm_test_hash(
     RNG shuffle: a deterministic pseudo-random relabeling that is identical
     in Spark and DuckDB, making the whole test hash-checkable. Statistically
     equivalent (md5 orders are exchangeable under H0); the seeded-RNG variant
-    stays for reference-faithful semantics in pytest."""
-    import hashlib
-
+    stays for reference-faithful semantics, bit-matched against
+    ``permutation_test`` in ``tests/test_kernel_family.py``."""
     import numpy as np
-    import pandas as pd
 
-    oc = order_col or value
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        df.select(F.col(sample).alias("s"), F.col(value).cast("double").alias("v"), F.col(oc).alias("o"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-        .select("s", "v", "rn")
-    )
+    from ..functions.perturbation import mmd2_masked
+
+    sub = _head_per_side(df, sample, order_col or value, n_per_side, v=F.col(value).cast("double"))
     two_sig2 = 2.0 * sigma * sigma
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["s", "rn"], kind="mergesort")
+    def fn(pdf):
         v = pdf["v"].to_numpy()
-        n = int((pdf["s"] == "ref").sum())
-        m = len(v) - n
         d = v[:, None] - v[None, :]
         k = np.exp(-(d * d) / two_sig2)
+        return _md5_perm(pdf, n_per_side, n_permutations, lambda m: mmd2_masked(k, m))
 
-        def mmd2(x_mask: np.ndarray) -> float:
-            kxx = k[np.ix_(x_mask, x_mask)]
-            kyy = k[np.ix_(~x_mask, ~x_mask)]
-            kxy = k[np.ix_(x_mask, ~x_mask)]
-            nn, mm = int(x_mask.sum()), int((~x_mask).sum())
-            return (
-                (kxx.sum() - np.trace(kxx)) / (nn * (nn - 1.0))
-                + (kyy.sum() - np.trace(kyy)) / (mm * (mm - 1.0))
-                - 2.0 * kxy.sum() / (nn * float(mm))
-            )
-
-        obs_mask = (pdf["s"] == "ref").to_numpy()
-        stat = mmd2(obs_mask)
-        gid = np.where(obs_mask, pdf["rn"].to_numpy(), n_per_side + pdf["rn"].to_numpy())
-        hits = 0
-        for p in range(1, n_permutations + 1):
-            pri = np.array([hashlib.md5(f"{p}:{g}".encode()).hexdigest() for g in gid])
-            order = np.argsort(pri, kind="stable")
-            mask = np.zeros(len(v), dtype=bool)
-            mask[order[:n]] = True
-            hits += int(stat <= mmd2(mask))
-        return pd.DataFrame(
-            {
-                "n_ref": [n],
-                "n_test": [m],
-                "mmd2": [round(stat, 6) + 0.0],
-                "p_value": [round(hits / n_permutations, 6)],
-            }
-        )
-
-    return sub.groupBy().applyInPandas(
-        fn, schema="n_ref long, n_test long, mmd2 double, p_value double"
-    )
+    return _perm_test(sub, "mmd2", fn)
 
 
 def preprocess_drift_hashproj(
@@ -884,21 +797,14 @@ def learned_kernel_drift_hash(
     import math
 
     import numpy as np
-    import pandas as pd
 
-    oc = order_col or value
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        df.select(F.col(sample).alias("s"), F.col(value).cast("double").alias("v"), F.col(oc).alias("o"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-        .select("s", "v", "rn")
-    )
+    from ..functions.perturbation import mmd2_masked
+
+    sub = _head_per_side(df, sample, order_col or value, n_per_side, v=F.col(value).cast("double"))
     two_sig2 = 2.0 * sigma * sigma
     one_m_eps = 1.0 - eps_mix
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["s", "rn"], kind="mergesort")
+    def fn(pdf):
         v = pdf["v"].to_numpy()
         ref_mask = (pdf["s"] == "ref").to_numpy()
         gid = np.where(ref_mask, pdf["rn"].to_numpy(), n_per_side + pdf["rn"].to_numpy())
@@ -929,44 +835,14 @@ def learned_kernel_drift_hash(
         b2 = ((c11 + lam) * c2y - c12 * c1y) / det
         a0 = my - b1 * m1 - b2 * m2
 
-        vh, hmask, hgid = v[ho], ref_mask[ho], gid[ho]
+        vh = v[ho]
         h1, h2 = phi(vh)
         sc = a0 + b1 * h1 + b2 * h2
         d = vh[:, None] - vh[None, :]
         k = one_m_eps * (sc[:, None] * sc[None, :]) + eps_mix * np.exp(-(d * d) / two_sig2)
-        nh, mh = int(hmask.sum()), int((~hmask).sum())
+        return _md5_perm(pdf[ho], n_per_side, n_permutations, lambda m: mmd2_masked(k, m))
 
-        def mmd2(x_mask: np.ndarray) -> float:
-            kxx = k[np.ix_(x_mask, x_mask)]
-            kyy = k[np.ix_(~x_mask, ~x_mask)]
-            kxy = k[np.ix_(x_mask, ~x_mask)]
-            nn, mm = float(x_mask.sum()), float((~x_mask).sum())
-            return (
-                (kxx.sum() - np.trace(kxx)) / (nn * (nn - 1.0))
-                + (kyy.sum() - np.trace(kyy)) / (mm * (mm - 1.0))
-                - 2.0 * kxy.sum() / (nn * mm)
-            )
-
-        stat = mmd2(hmask)
-        hits = 0
-        for p in range(1, n_permutations + 1):
-            pri = np.array([hashlib.md5(f"{p}:{g}".encode()).hexdigest() for g in hgid])
-            order = np.argsort(pri, kind="stable")
-            mask = np.zeros(len(vh), dtype=bool)
-            mask[order[:nh]] = True
-            hits += int(stat <= mmd2(mask))
-        return pd.DataFrame(
-            {
-                "n_ref": [nh],
-                "n_test": [mh],
-                "lk_stat": [round(stat, 6) + 0.0],
-                "p_value": [round(hits / n_permutations, 6)],
-            }
-        )
-
-    return sub.groupBy().applyInPandas(
-        fn, schema="n_ref long, n_test long, lk_stat double, p_value double"
-    )
+    return _perm_test(sub, "lk_stat", fn)
 
 
 def lsdd_perm_test_hash(
@@ -1002,28 +878,18 @@ def lsdd_perm_test_hash(
       exchangeable under H0 like RNG shuffles but identical in both engines.
 
     The reference-faithful seeded variant (median heuristic, λ search,
-    RNG permutations) is :func:`lsdd_perm_test`, pytest-covered.
+    RNG permutations) is :func:`lsdd_perm_test`, bit-matched against
+    ``functions.lsdd.lsdd_2samp`` in ``tests/test_kernel_family.py``.
     All quadratic-form arithmetic is spelled out scalar-by-scalar (no
     np.linalg) so the oracle's SQL evaluates the identical expression tree.
     """
-    import hashlib
-
     import numpy as np
-    import pandas as pd
 
-    oc = order_col or value
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        df.select(F.col(sample).alias("s"), F.col(value).cast("double").alias("v"), F.col(oc).alias("o"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-        .select("s", "v", "rn")
-    )
+    sub = _head_per_side(df, sample, order_col or value, n_per_side, v=F.col(value).cast("double"))
     two_sig2 = 2.0 * sigma * sigma
     four_sig2 = 4.0 * sigma * sigma  # (√2·σ)² · 2
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["s", "rn"], kind="mergesort")
+    def fn(pdf):
         ref = pdf[pdf["s"] == "ref"]
         v = pdf["v"].to_numpy()
         n = int((pdf["s"] == "ref").sum())
@@ -1050,28 +916,9 @@ def lsdd_perm_test_hash(
             h2 = float(k2[x_mask].sum() / n - k2[~x_mask].sum() / m)
             return m11 * (h1 * h1 + h2 * h2) + 2.0 * m12 * h1 * h2
 
-        obs_mask = (pdf["s"] == "ref").to_numpy()
-        stat = lsdd(obs_mask)
-        gid = np.where(obs_mask, pdf["rn"].to_numpy(), n_per_side + pdf["rn"].to_numpy())
-        hits = 0
-        for p in range(1, n_permutations + 1):
-            pri = np.array([hashlib.md5(f"{p}:{g}".encode()).hexdigest() for g in gid])
-            order = np.argsort(pri, kind="stable")
-            mask = np.zeros(len(v), dtype=bool)
-            mask[order[:n]] = True
-            hits += int(stat <= lsdd(mask))
-        return pd.DataFrame(
-            {
-                "n_ref": [n],
-                "n_test": [m],
-                "lsdd_stat": [round(stat, 6) + 0.0],
-                "p_value": [round(hits / n_permutations, 6)],
-            }
-        )
+        return _md5_perm(pdf, n_per_side, n_permutations, lsdd)
 
-    return sub.groupBy().applyInPandas(
-        fn, schema="n_ref long, n_test long, lsdd_stat double, p_value double"
-    )
+    return _perm_test(sub, "lsdd_stat", fn)
 
 
 def lsdd_perm_test(
@@ -1086,36 +933,17 @@ def lsdd_perm_test(
     """Offline LSDD drift with a permutation p-value
     (``alibi_detect/cd/pytorch/lsdd.py:13-135``): deterministic head
     subsamples per side, one Arrow group running the seeded NumPy kernel."""
-    import pandas as pd
-
     from ..functions.lsdd import lsdd_2samp
 
-    oc = order_col or value
-    w = Window.partitionBy("s").orderBy("o")
-    sub = (
-        df.select(F.col(sample).alias("s"), F.col(value).cast("double").alias("v"), F.col(oc).alias("o"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side)
-        .select("s", "v", "rn")
-    )
+    sub = _head_per_side(df, sample, order_col or value, n_per_side, v=F.col(value).cast("double"))
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["s", "rn"], kind="mergesort")
+    def fn(pdf):
         x = pdf[pdf["s"] == "ref"]["v"].to_numpy()[:, None]
         y = pdf[pdf["s"] != "ref"]["v"].to_numpy()[:, None]
         p, stat = lsdd_2samp(x, y, n_permutations=n_permutations, seed=seed)
-        return pd.DataFrame(
-            {
-                "n_ref": [len(x)],
-                "n_test": [len(y)],
-                "lsdd_stat": [round(stat, 6) + 0.0],
-                "p_value": [round(p, 6)],
-            }
-        )
+        return len(x), len(y), stat, p
 
-    return sub.groupBy().applyInPandas(
-        fn, schema="n_ref long, n_test long, lsdd_stat double, p_value double"
-    )
+    return _perm_test(sub, "lsdd_stat", fn)
 
 
 # ---------------------------------------------------------------------------
@@ -1219,17 +1047,9 @@ def context_mmd_hash(
     shift is only approximate here — the reference-faithful property lives
     in :func:`context_mmd_drift` (rows-only, pytest-covered including the
     context-shift-quiet case)."""
-    oc = order_col or value
-    w = Window.partitionBy("s").orderBy("o")
-    base = (
-        df.select(
-            F.col(sample).alias("s"),
-            F.col(value).cast("double").alias("v"),
-            F.col(context).cast("double").alias("cx"),
-            F.col(oc).alias("o"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_per_side + n_held_per_side)
+    base = _head_per_side(
+        df, sample, order_col or value, n_per_side + n_held_per_side,
+        v=F.col(value).cast("double"), cx=F.col(context).cast("double"),
     )
     pooled = base.where(F.col("rn") <= n_per_side)
     held = base.where(F.col("rn") > n_per_side)

@@ -14,6 +14,20 @@ from pyspark.sql import DataFrame
 from .ann import EMB_COL, _collect_matrix
 
 
+def top_k_ranked(scored: DataFrame, score: str, id_cols: list[str], top_k: int) -> DataFrame:
+    """The ``top_k`` rows by ``score`` descending (ties by ``id_cols``) with
+    a 1-based int ``rank``. orderBy+limit plans as TakeOrderedAndProject: a
+    distributed per-partition top-k + tiny driver merge, NOT a global sort;
+    the rank window then runs on k rows only."""
+    from pyspark.sql import Window, functions as F
+
+    order = [F.col(score).desc(), *[F.col(c) for c in id_cols]]
+    top = scored.orderBy(*order).limit(top_k)
+    return top.withColumn("rank", F.row_number().over(Window.orderBy(*order))).select(
+        *id_cols, score, F.col("rank").cast("int").alias("rank")
+    )
+
+
 def pca_outlier_scores(
     emb: DataFrame,
     ref_pred,
@@ -289,7 +303,7 @@ def pca_outlier_2feat(
     one partial+final DECIMAL moment aggregate (exact under any order), one
     broadcast join, no UDF. The d-dimensional eigendecomposition variant is
     :func:`pca_outlier_scores`."""
-    from pyspark.sql import Window, functions as F
+    from pyspark.sql import functions as F
 
     x, y = cols
     dx_in = F.col(x).cast("decimal(18,4)")
@@ -318,15 +332,7 @@ def pca_outlier_2feat(
     proj = dx * v1 + dy * v2
     score = (proj * proj) / (v1 * v1 + v2 * v2)
     scored = j.select(*id_cols, F.round(score, 6).alias("pca2_score"))
-    # orderBy+limit → TakeOrderedAndProject: distributed per-partition top-k
-    # + tiny driver merge (same shape as drift.mahalanobis_scores) — NOT a
-    # single-partition global-window sort. row_number runs on k rows only.
-    order = [F.col("pca2_score").desc(), *[F.col(c) for c in id_cols]]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        *id_cols, "pca2_score", F.col("rank").cast("int").alias("rank")
-    )
+    return top_k_ranked(scored, "pca2_score", id_cols, top_k)
 
 
 def pca_outlier_dfeat(
@@ -973,7 +979,7 @@ def vae_outlier_2feat(
     Plan: one partial+final DECIMAL moment aggregate, broadcast of the 1-row
     parameter relation, codegen column math, ``TakeOrderedAndProject`` top-k
     (same shape as :func:`pca_outlier_2feat`)."""
-    from pyspark.sql import Window, functions as F
+    from pyspark.sql import functions as F
 
     x, y = cols
     dx_in = F.col(x).cast("decimal(18,4)")
@@ -1022,12 +1028,7 @@ def vae_outlier_2feat(
     e2 = (dy - F.col("w2") * mz) * (dy - F.col("w2") * mz) + F.col("w2") * F.col("w2") * pv
     score = (e1 + e2) / F.lit(2.0)
     scored = j.select(id_col, (F.round(score, 6) + F.lit(0.0)).alias("vae_score"))
-    order = [F.col("vae_score").desc(), F.col(id_col)]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        id_col, "vae_score", F.col("rank").cast("int").alias("rank")
-    )
+    return top_k_ranked(scored, "vae_score", [id_col], top_k)
 
 
 def ae_outlier_scores(
@@ -1247,7 +1248,7 @@ def ae_outlier_2feat(
     instance aggregation (``od/ae.py:208``): with d=2, ``perc<=50`` keeps
     the single worst feature error (``greatest``), ``perc>50`` averages
     both. Returns the top-k ``(id, ae2_score, rank)``."""
-    from pyspark.sql import Window, functions as F
+    from pyspark.sql import functions as F
 
     x, y = cols
     dx_in = F.col(x).cast("decimal(18,4)")
@@ -1286,12 +1287,7 @@ def ae_outlier_2feat(
     fu = eu * eu
     score = F.greatest(fv, fu) if outlier_perc <= 50.0 else (fv + fu) / F.lit(2.0)
     scored = j.select(id_col, (F.round(score, 6) + F.lit(0.0)).alias("ae2_score"))
-    order = [F.col("ae2_score").desc(), F.col(id_col)]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        id_col, "ae2_score", F.col("rank").cast("int").alias("rank")
-    )
+    return top_k_ranked(scored, "ae2_score", [id_col], top_k)
 
 
 def kpca_outlier_2land(
@@ -1428,12 +1424,7 @@ def ocsvm_mean_2feat(
         total = total + kern(i)
     score = -(total / F.lit(float(n_landmarks)))
     scored = j.select(id_col, (F.round(score, 6) + F.lit(0.0)).alias("ocsvm_score"))
-    order = [F.col("ocsvm_score").desc(), F.col(id_col)]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        id_col, "ocsvm_score", F.col("rank").cast("int").alias("rank")
-    )
+    return top_k_ranked(scored, "ocsvm_score", [id_col], top_k)
 
 
 def iforest_hash_2feat(
@@ -1467,7 +1458,7 @@ def iforest_hash_2feat(
     tree aggregate plus once for scoring, with no wide shuffle."""
     import hashlib
 
-    from pyspark.sql import Window, functions as F
+    from pyspark.sql import functions as F
 
     gamma = 0.5772156649015329
     x, y = cols
@@ -1550,12 +1541,7 @@ def iforest_hash_2feat(
     avg_h = avg_h / F.lit(float(n_trees))
     score = F.pow(F.lit(2.0), -(avg_h / c_of(F.col("nn"))))
     scored = j.select(id_col, (F.round(score, 6) + F.lit(0.0)).alias("if_score"))
-    order = [F.col("if_score").desc(), F.col(id_col)]
-    top = scored.orderBy(*order).limit(top_k)
-    w = Window.orderBy(*order)
-    return top.withColumn("rank", F.row_number().over(w)).select(
-        id_col, "if_score", F.col("rank").cast("int").alias("rank")
-    )
+    return top_k_ranked(scored, "if_score", [id_col], top_k)
 
 
 def aegmm_features(

@@ -166,3 +166,29 @@ def test_inject_outlier_ts_and_permutation_test():
     p_shift, _, _ = permutation_test(a, b_shift, mmd2_unbiased, n_permutations=200, seed=3, sigma=1.0)
     assert p_same > 0.05
     assert p_shift < 0.01
+
+
+def test_md5_permutation_test_relabels_by_md5_order():
+    import hashlib
+
+    from alibi_detect_spark.functions.perturbation import md5_permutation_test
+
+    ids = np.array([3, 7, 11, 20, 42, 105])
+    x_mask = np.array([True, True, False, False, True, False])
+    seen = []
+
+    def metric(mask):
+        seen.append(mask.copy())
+        return float(ids[mask].sum())
+
+    n_perm = 12
+    stat, p = md5_permutation_test(metric, x_mask, ids, n_perm)
+    assert stat == 3 + 7 + 42
+    assert len(seen) == n_perm + 1 and (seen[0] == x_mask).all()
+    for perm, mask in enumerate(seen[1:], start=1):
+        first = sorted(ids, key=lambda g: hashlib.md5(f"{perm}:{g}".encode()).hexdigest())[:3]
+        assert sorted(ids[mask]) == sorted(first), perm
+    assert p == sum(stat <= float(ids[m].sum()) for m in seen[1:]) / n_perm
+
+    # a constant metric ties every relabeling with the observed value
+    assert md5_permutation_test(lambda m: 0.5, x_mask, ids, n_perm) == (0.5, 1.0)
